@@ -4,7 +4,10 @@ plan; north rule of BASELINE.json).
 Plan shape (all DataFrame ops; the parse UDF is the only Python):
 
 1. bucket turns by ``pmod(xxhash64(conv_id), n_buckets)`` (checkpoint /
-   resume granularity) and drop buckets already in the manifest;
+   resume granularity); on resume the buckets already in the manifest
+   are dropped from the RAW turns, before the shuffle and the parse —
+   the parse is an opaque ``mapInArrow``, so no filter above it could
+   be pushed below it;
 2. salted repartition on ``(conv_id, turn_idx div chunk)`` — long
    conversations split across partitions so one 10k-turn conversation
    cannot stall a whole executor — then ``sortWithinPartitions(conv_id,
@@ -13,13 +16,16 @@ Plan shape (all DataFrame ops; the parse UDF is the only Python):
 3. one Arrow-vectorized parse UDF → struct column (text crosses the
    JVM↔Python boundary once);
 4. broadcast hash joins against the tiny role/tool/severity dictionaries
-   (no shuffle);
+   (JVM-local relations: no shuffle and no Python tasks);
 5. routing: ``sink = severity_band + '-' + sink_hint`` (quarantine for
    parse failures / empties) — fan-out is ONE scan writing
    ``partitionBy(sink, bucket)`` with dynamic partition overwrite, never
    one scan per sink;
 6. aggregates per bucket (sink counts, token counts, template counts) off
-   the column-pruned read-back of the routed sink (one heavy pass total);
+   ONE cached, column-pruned read-back of the routed sink, hash-
+   partitioned on ``bucket``: every aggregate's clustering is already
+   satisfied, so none shuffles again and each table gets one file per
+   bucket;
 7. per-bucket manifest records appended last (commit point).
 """
 
@@ -29,7 +35,7 @@ import os
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..rules.presets import default_program
@@ -43,6 +49,8 @@ ROUTED = "routed"
 AGG_SINK = "agg_sink_counts"
 AGG_TOKEN = "agg_token_counts"
 AGG_TEMPLATE = "agg_template_counts"
+# per-bucket counters of the manifest records and the run's metrics
+_COUNTERS = ("n_rows", "n_ok", "n_fail", "n_empty", "n_tokens")
 
 # variable masking for template ids: IPs / hex runs / numbers → placeholders.
 # Fast-path guard first: every maskable class requires a digit or a colon
@@ -74,16 +82,12 @@ class PipelineConfig:
     # sink backend seam: parquet | iceberg | auto (iceberg when its
     # runtime jar is present; see plans/sink.py)
     sink_backend: str = "parquet"
-    # aggregate feed: True (default) reads the precomputed ok/fail/empty
-    # boolean columns back from the routed sink; False re-derives them
-    # from the message/error/rule_id columns (the pre-v2 path, kept as
-    # the measured A/B seam — see BENCH/DELTAS.md round 4)
-    agg_from_flags: bool = True
     # token aggregate mode: None writes the full per-(bucket, sink)
-    # token counts (a distinct-token-sized shuffle — fine to sf-scale,
-    # the 10^12-turn bottleneck); an int k switches AGG_TOKEN to exact
-    # per-(bucket, sink) heavy hitters (operators/heavy.py): only
-    # tokens above 1/k of their sink's volume, bounded shuffle
+    # token counts (distinct-token-sized aggregate state and output —
+    # fine to sf-scale, the 10^12-turn bottleneck); an int k switches
+    # AGG_TOKEN to exact per-(bucket, sink) heavy hitters
+    # (operators/heavy.py): only tokens above 1/k of their sink's
+    # volume, bounded state
     tokens_heavy_k: Optional[int] = None
 
 
@@ -95,34 +99,116 @@ class PipelineResult:
     metrics: Dict
 
 
-def enriched_turns(spark: SparkSession, turns: DataFrame,
-                   cfg: PipelineConfig) -> DataFrame:
-    """parse + enrich + route; no writes. The returned frame carries
-    bucket, sink, severity and the flattened parsed fields."""
-    p = cfg.partitions or spark.sparkContext.defaultParallelism
-    df = turns.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(cfg.n_buckets)).cast("int"))
-    # salted repartition + stable within-partition turn order
-    df = (df.repartition(p, "conv_id",
-                         (F.col("turn_idx") / cfg.turn_chunk).cast("int"))
-            .sortWithinPartitions("conv_id", "turn_idx"))
-    df = with_parsed(df, cfg.program, text_col="text", ts_col="ts")
+def bucket_of(n_buckets: int) -> Column:
+    """The resume unit of a turn: ``pmod(xxhash64(conv_id), n_buckets)``
+    — every turn of a conversation lands in the same bucket."""
+    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
+
+def route_turns(spark: SparkSession, parsed: DataFrame) -> DataFrame:
+    """The severity → sink routing fold over a ``with_parsed`` frame,
+    shared by the batch pipeline and the streaming micro-batches:
+    ``severity`` is the third parsed word, looked up with the tool in
+    the broadcast dictionaries; parse failures and empties go to
+    ``quarantine``, an unknown severity to ``unrouted``."""
     ok = F.col("parsed.message").isNotNull()
     # try_element_at: ANSI mode (Spark 4 default) makes element_at
     # THROW on a <3-word message — a single short-but-parseable line
-    # would kill the whole job; null falls through to "unrouted"
-    severity = (F.when(ok, F.try_element_at("parsed.words", F.lit(3)))
-                 .otherwise(F.lit(None)))
-    df = df.withColumn("severity", severity)
-    df = (df.join(F.broadcast(role_dim(spark)), "role", "left")
-            .join(F.broadcast(tool_dim(spark)), "tool", "left")
-            .join(F.broadcast(severity_dim(spark)), "severity", "left"))
+    # would kill the whole job (or poison a streaming replay for good);
+    # null falls through to "unrouted"
+    severity = F.when(ok, F.try_element_at("parsed.words", F.lit(3)))
+    df = (parsed.withColumn("severity", severity)
+                .join(F.broadcast(tool_dim(spark)), "tool", "left")
+                .join(F.broadcast(severity_dim(spark)), "severity", "left"))
     sink = (F.when(~ok, F.lit("quarantine"))
              .when(F.col("severity_band").isNull(), F.lit("unrouted"))
              .otherwise(F.concat_ws("-", "severity_band",
                                     F.coalesce("sink_hint", F.lit("chat")))))
     return df.withColumn("sink", sink)
+
+
+def enriched_turns(spark: SparkSession, turns: DataFrame,
+                   cfg: PipelineConfig) -> DataFrame:
+    """parse + enrich + route; no writes. The returned frame carries
+    bucket, sink, severity and the flattened parsed fields."""
+    p = cfg.partitions or spark.sparkContext.defaultParallelism
+    df = turns.withColumn("bucket", bucket_of(cfg.n_buckets))
+    # salted repartition + stable within-partition turn order
+    df = (df.repartition(p, "conv_id",
+                         (F.col("turn_idx") / cfg.turn_chunk).cast("int"))
+            .sortWithinPartitions("conv_id", "turn_idx"))
+    df = with_parsed(df, cfg.program, text_col="text", ts_col="ts")
+    df = df.join(F.broadcast(role_dim(spark)), "role", "left")
+    return route_turns(spark, df)
+
+
+def bucket_cache(spark: SparkSession, cfg: PipelineConfig, lineage: str,
+                 done=frozenset()) -> DataFrame:
+    """The narrow read-back of the routed sink that every aggregate
+    shares (the caller persists it): this lineage's rows outside the
+    committed buckets ``done``, hash-partitioned on ``bucket``.
+
+    One cached projection, because re-scanning the many-dirs routed sink
+    per aggregate serialized on file listing/opens (measured eff ~0.5
+    across core counts). The flags come straight off the routed sink's
+    boolean columns, so the scan never decodes the message/error string
+    columns. Partitioned on bucket ONCE: every aggregate groups by
+    bucket first, so none of them shuffles again, and each partitioned
+    write emits one file per bucket dir."""
+    p = cfg.partitions or spark.sparkContext.defaultParallelism
+    df = (read_partitioned(spark, os.path.join(cfg.out_dir, ROUTED),
+                           backend=cfg.sink_backend)
+          .filter(F.col("lineage") == lineage))
+    if done:
+        df = df.filter(~F.col("bucket").isin(sorted(done)))
+    return (df.select("bucket", "sink", "ok", "fail", "empty", "words")
+              .repartition(min(p, cfg.n_buckets), "bucket"))
+
+
+def bucket_stats(cache: DataFrame) -> DataFrame:
+    """Per-(bucket, sink) counters over :func:`bucket_cache`: ONE frame
+    feeds both the sink-counts table and the manifest records."""
+    return cache.groupBy("bucket", "sink").agg(
+        F.count("*").alias("n_rows"),
+        F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("n_ok"),
+        F.sum(F.when(F.col("fail"), 1).otherwise(0)).alias("n_fail"),
+        F.sum(F.when(F.col("empty"), 1).otherwise(0)).alias("n_empty"),
+        F.sum(F.coalesce(F.size("words"), F.lit(0))).alias("n_tokens"))
+
+
+def bucket_aggregates(cache: DataFrame,
+                      cfg: PipelineConfig) -> Dict[str, DataFrame]:
+    """The token and template count tables over :func:`bucket_cache`,
+    keyed by their output dir name (only those ``cfg`` asks for)."""
+    tables = {}
+    ok = cache.filter(F.col("ok"))
+    if cfg.write_tokens:
+        tok_stream = ok.select("bucket", "sink",
+                               F.explode("words").alias("token"))
+        if cfg.tokens_heavy_k:
+            # bounded mode: exact counts of tokens above 1/k of their
+            # (bucket, sink) volume — the only token aggregate that
+            # survives a 10^12-turn vocabulary
+            from ..operators.heavy import heavy_hitters
+            tables[AGG_TOKEN] = heavy_hitters(tok_stream, "token",
+                                              k=cfg.tokens_heavy_k,
+                                              group_cols=["bucket", "sink"])
+        else:
+            tables[AGG_TOKEN] = (tok_stream.groupBy("bucket", "sink", "token")
+                                           .agg(F.count("*").alias("n")))
+    if cfg.write_templates:
+        # mask once into a single separator-joined key; the display form
+        # (separator → space) is derived on the few aggregated rows
+        tkey = F.concat_ws("\x1e", F.expr(_MASK))
+        tables[AGG_TEMPLATE] = (
+            ok.select("bucket", tkey.alias("template_key"))
+              .groupBy("bucket", F.md5("template_key").alias("template_id"))
+              .agg(F.count("*").alias("n"),
+                   F.min("template_key").alias("template_key"))
+              .withColumn("template",
+                          F.regexp_replace("template_key", "\x1e", " "))
+              .drop("template_key"))
+    return tables
 
 
 def run_pipeline(spark: SparkSession, turns: DataFrame,
@@ -143,11 +229,12 @@ def run_pipeline(spark: SparkSession, turns: DataFrame,
     if not done:
         mf.wipe_outputs(cfg.out_dir, (ROUTED, AGG_SINK, AGG_TOKEN,
                                       AGG_TEMPLATE), spark=spark)
-
-    df = enriched_turns(spark, turns, cfg)
-    if done:
-        df = df.filter(~F.col("bucket").isin(sorted(done)))
-    df = df.select(
+    else:
+        # drop committed buckets from the RAW turns: above the opaque
+        # mapInArrow parse the optimizer could not push this filter down,
+        # and every committed turn would be shuffled and parsed for nothing
+        turns = turns.filter(~bucket_of(cfg.n_buckets).isin(sorted(done)))
+    df = enriched_turns(spark, turns, cfg).select(
         "conv_id", "turn_idx", "role", "tool", "ts",
         F.col("parsed.ts").alias("parsed_ts"),
         F.col("parsed.tz_sec").alias("tz_sec"),
@@ -199,107 +286,35 @@ def run_pipeline(spark: SparkSession, turns: DataFrame,
         # as a silent zero-metric success.
         return PipelineResult(lineage_id=lineage, buckets_processed=[],
                               buckets_skipped=sorted(done),
-                              metrics={k: 0 for k in ("n_rows", "n_ok",
-                                                      "n_fail", "n_empty",
-                                                      "n_tokens")})
-    df = (read_partitioned(spark, routed_dir, backend=cfg.sink_backend)
-              .filter(F.col("lineage") == lineage))
-    if done:
-        df = df.filter(~F.col("bucket").isin(sorted(done)))
-    # the three aggregate passes share one NARROW cached projection —
-    # re-scanning the many-dirs routed sink per pass serialized on file
-    # listing/opens (measured eff ~0.5 across core counts). Only the
-    # null-flags of message/error and the empty-flag of rule_id are
-    # consumed downstream, so booleans ride the cache, not the strings —
-    # and with agg_from_flags the booleans come straight off the routed
-    # sink's flag columns, so the scan never decodes the string columns.
-    if cfg.agg_from_flags:
-        df = df.select("bucket", "sink",
-                       F.col("ok").alias("_ok"),
-                       "words",
-                       F.col("empty").alias("_empty"),
-                       F.col("fail").alias("_fail")).persist()
-    else:
-        df = df.select("bucket", "sink",
-                       F.col("message").isNotNull().alias("_ok"),
-                       "words",
-                       (F.col("rule_id") == -2).alias("_empty"),
-                       F.col("error").isNotNull().alias("_fail")).persist()
-
-    # ONE stats pass feeds both the sink-counts table and the manifest
-    stats = (df.groupBy("bucket", "sink").agg(
-        F.count("*").alias("n_rows"),
-        F.sum(F.when(F.col("_ok"), 1).otherwise(0)).alias("n_ok"),
-        F.sum(F.when(F.col("_fail"), 1).otherwise(0)).alias("n_fail"),
-        F.sum(F.when(F.col("_empty"), 1).otherwise(0)).alias("n_empty"),
-        F.sum(F.coalesce(F.size("words"), F.lit(0))).alias("n_tokens"),
-    ).collect())
-    if not stats:
-        df.unpersist()
+                              metrics=dict.fromkeys(_COUNTERS, 0))
+    cache = bucket_cache(spark, cfg, lineage, done).persist()
+    stats = bucket_stats(cache)
+    stat_rows = stats.collect()
+    if not stat_rows:
+        cache.unpersist()
         # everything was already committed (a fully-resumed rerun)
         return PipelineResult(lineage_id=lineage, buckets_processed=[],
                               buckets_skipped=sorted(done),
-                              metrics={k: 0 for k in ("n_rows", "n_ok",
-                                                      "n_fail", "n_empty",
-                                                      "n_tokens")})
-    write_partitioned(spark.createDataFrame(stats)
-                      .select("bucket", "sink", "n_rows")
-                      .repartition(8, "bucket"),
-                      os.path.join(cfg.out_dir, AGG_SINK), ["bucket"],
-                      backend=cfg.sink_backend)
-
-    if cfg.write_tokens:
-        tok_stream = (df.filter(F.col("_ok"))
-                        .select("bucket", "sink",
-                                F.explode("words").alias("token")))
-        if cfg.tokens_heavy_k:
-            # bounded-shuffle mode: exact counts of tokens above 1/k of
-            # their (bucket, sink) volume — the only token aggregate
-            # that survives a 10^12-turn vocabulary
-            from ..operators.heavy import heavy_hitters
-            tok_agg = heavy_hitters(tok_stream, "token",
-                                    k=cfg.tokens_heavy_k,
-                                    group_cols=["bucket", "sink"])
-        else:
-            tok_agg = (tok_stream.groupBy("bucket", "sink", "token")
-                                 .agg(F.count("*").alias("n")))
-        write_partitioned(
-            tok_agg.repartition(min(p, cfg.n_buckets), "bucket"),
-            os.path.join(cfg.out_dir, AGG_TOKEN), ["bucket"],
-            backend=cfg.sink_backend)
-
-    if cfg.write_templates:
-        # mask once into a single separator-joined key; the display form
-        # (separator → space) is derived on the few aggregated rows
-        tkey = F.concat_ws("\x1e", F.expr(_MASK))
-        write_partitioned(
-            df.filter(F.col("_ok"))
-              .select("bucket", tkey.alias("template_key"))
-              .groupBy("bucket", F.md5("template_key").alias("template_id"))
-              .agg(F.count("*").alias("n"),
-                   F.min("template_key").alias("template_key"))
-              .withColumn("template",
-                          F.regexp_replace("template_key", "\x1e", " "))
-              .drop("template_key")
-              .repartition(8, "bucket"),
-            os.path.join(cfg.out_dir, AGG_TEMPLATE), ["bucket"],
-            backend=cfg.sink_backend)
-
-    df.unpersist()
+                              metrics=dict.fromkeys(_COUNTERS, 0))
+    tables = {AGG_SINK: stats.select("bucket", "sink", "n_rows"),
+              **bucket_aggregates(cache, cfg)}
+    for name, table in tables.items():
+        write_partitioned(table, os.path.join(cfg.out_dir, name), ["bucket"],
+                          backend=cfg.sink_backend)
+    cache.unpersist()
 
     # per-bucket manifest records (the commit point, written LAST)
     by_bucket: Dict[int, Dict] = {}
-    for r in stats:
+    for r in stat_rows:
         rec = by_bucket.setdefault(
-            r["bucket"], {"bucket": r["bucket"], "n_rows": 0, "n_ok": 0,
-                          "n_fail": 0, "n_empty": 0, "n_tokens": 0})
-        for k in ("n_rows", "n_ok", "n_fail", "n_empty", "n_tokens"):
+            r["bucket"],
+            {"bucket": r["bucket"], **dict.fromkeys(_COUNTERS, 0)})
+        for k in _COUNTERS:
             rec[k] += int(r[k])
     records = sorted(by_bucket.values(), key=lambda x: x["bucket"])
     mf.append_bucket_records(cfg.out_dir, lineage, records, spark=spark)
 
-    totals = {k: int(sum(r[k] for r in records))
-              for k in ("n_rows", "n_ok", "n_fail", "n_empty", "n_tokens")}
+    totals = {k: int(sum(r[k] for r in records)) for k in _COUNTERS}
     # phase walls: the parse→enrich→route fan-out write vs the aggregate
     # passes — the observability a capacity plan needs (profiled ~55%/20%
     # of wall respectively at sf0.1; parse compute rides inside the write

@@ -135,23 +135,33 @@ def transcripts(spark: SparkSession, n_convs: int, seed: int = 42,
                .drop("_shuf"))
 
 
+def _dim(spark: SparkSession, columns, rows) -> DataFrame:
+    """A tiny lookup table built on the JVM side: one ``inline`` over a
+    literal array of structs. ``spark.createDataFrame(list)`` would back
+    it with a Python RDD, so every broadcast of it would run Python
+    tasks just to ship a handful of rows."""
+    structs = [F.struct(*[F.lit(v).alias(c) for c, v in zip(columns, row)])
+               for row in rows]
+    return spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))
+
+
 def role_dim(spark: SparkSession) -> DataFrame:
     rows = [("user", "human", False), ("assistant", "model", True),
             ("system", "control", True), ("tool", "tool", True)]
-    return spark.createDataFrame(rows, "role string, role_group string, is_automated boolean")
+    return _dim(spark, ("role", "role_group", "is_automated"), rows)
 
 
 def tool_dim(spark: SparkSession) -> DataFrame:
     rows = [("bash", "shell", "ops"), ("search", "retrieval", "research"),
             ("editor", "files", "ops"), ("browser", "retrieval", "research"),
             ("none", "none", "chat")]
-    return spark.createDataFrame(rows, "tool string, tool_family string, sink_hint string")
+    return _dim(spark, ("tool", "tool_family", "sink_hint"), rows)
 
 
 def severity_dim(spark: SparkSession) -> DataFrame:
     rows = [("DEBUG", "low"), ("INFO", "low"), ("NOTICE", "mid"),
             ("WARN", "mid"), ("ERROR", "high"), ("CRIT", "high")]
-    return spark.createDataFrame(rows, "severity string, severity_band string")
+    return _dim(spark, ("severity", "severity_band"), rows)
 
 
 def write_transcripts(spark: SparkSession, path: str, n_convs: int,

@@ -16,35 +16,22 @@ from pyspark.sql import functions as F
 from ..rules.presets import default_program
 from ..rules.spec import RuleProgram
 from ..functions.udf import with_parsed
-from ..sources.transcripts import severity_dim, tool_dim
+from ..plans.pipeline import route_turns
 
 
 def streaming_parse(spark: SparkSession, input_dir: str,
                     program: RuleProgram | None = None,
                     schema=None) -> DataFrame:
     """File-source stream of turns → parsed + routed stream. The parse
-    UDF is identical to the batch path (one compiled program, Arrow
-    batches per micro-batch)."""
+    UDF and the routing fold are identical to the batch path (one
+    compiled program, Arrow batches per micro-batch)."""
     program = program or default_program()
     if schema is None:
         schema = ("conv_id string, turn_idx int, role string, text string, "
                   "tool string, ts timestamp")
     stream = (spark.readStream.schema(schema).parquet(input_dir))
-    parsed = with_parsed(stream, program, text_col="text", ts_col="ts")
-    ok = F.col("parsed.message").isNotNull()
-    # try_element_at: ANSI mode (Spark 4 default) makes element_at
-    # THROW on a <3-word message, and one short line would poison the
-    # stream permanently (replay hits the same row); null routes to
-    # "unrouted" instead
-    severity = F.when(ok, F.try_element_at("parsed.words", F.lit(3)))
-    out = (parsed.withColumn("severity", severity)
-                 .join(F.broadcast(severity_dim(spark)), "severity", "left")
-                 .join(F.broadcast(tool_dim(spark)), "tool", "left"))
-    sink = (F.when(~ok, F.lit("quarantine"))
-             .when(F.col("severity_band").isNull(), F.lit("unrouted"))
-             .otherwise(F.concat_ws("-", "severity_band",
-                                    F.coalesce("sink_hint", F.lit("chat")))))
-    return out.withColumn("sink", sink)
+    return route_turns(spark, with_parsed(stream, program, text_col="text",
+                                          ts_col="ts"))
 
 
 def streaming_dedup_exact(docs: DataFrame, text_col: str = "text",

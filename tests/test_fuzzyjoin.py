@@ -68,6 +68,14 @@ class TestFuzzySelfPairs:
         with pytest.raises(Exception, match="max_bucket"):
             fuzzyjoin.fuzzy_self_pairs(df, "s", max_bucket=5).collect()
 
+    def test_max_bucket_error_names_a_hot_string(self, spark):
+        # the error carries one string of the overflowing bucket next to
+        # its key hash; only the bucket of variant "a" overflows here
+        df = _strs(spark, [f"a{c}" for c in "bcdefghijklmnopqrstuvwxyz"])
+        with pytest.raises(Exception,
+                           match=r"key hash -?\d+ \(sample string 'a\w?'\)"):
+            fuzzyjoin.fuzzy_self_pairs(df, "s", max_bucket=5).collect()
+
 
 class TestFuzzyJoin:
     def test_bipartite_orientation(self, spark):

@@ -795,7 +795,6 @@ class TestDedup:
                 "with anything else present"),
         ]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        import pyspark.sql.functions as F
         composite = (dedup.duplicate_span_stats(docs, k=8)
                      .join(dedup.drop_duplicate_spans(docs, k=8),
                            "doc_id"))

@@ -160,6 +160,76 @@ class TestPipelineEquality:
         assert sc.agg(F.sum("n_rows")).first()[0] == n_half
 
 
+def _files_per_bucket_dir(table_dir):
+    """{bucket dir: number of data files in it} under a partitioned table."""
+    return {d: sum(1 for f in fs if not f.startswith(("_", ".")))
+            for d, _, fs in os.walk(table_dir)
+            if os.path.basename(d).startswith("bucket=")}
+
+
+class TestPerRunWork:
+    """The fixed per-run Spark work the pipeline must not pay: Python
+    tasks for the lookup dictionaries, parsing committed buckets, and
+    extra shuffles (or extra files) in the aggregate phase."""
+
+    def test_dims_run_no_python(self, spark):
+        from log2seq_spark.sources.transcripts import (role_dim, severity_dim,
+                                                       tool_dim)
+        for dim in (role_dim, tool_dim, severity_dim):
+            df = dim(spark)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+            assert df.count() > 0
+
+    def test_resume_parses_only_remaining_buckets(self, spark, turns,
+                                                  tmpdir_path, monkeypatch):
+        from log2seq_spark.plans import pipeline
+        cfg = PipelineConfig(out_dir=tmpdir_path, n_buckets=8, partitions=8)
+        bucket = pipeline.bucket_of(8)
+        run_pipeline(spark, turns.filter(bucket < 3), cfg, resume=True)
+
+        seen = []
+        real = pipeline.enriched_turns
+
+        def spy(spark_, turns_, cfg_):
+            seen.append((turns_, real(spark_, turns_, cfg_)))
+            return seen[-1][1]
+
+        monkeypatch.setattr(pipeline, "enriched_turns", spy)
+        res = run_pipeline(spark, turns, cfg, resume=True)
+        assert res.buckets_skipped == [0, 1, 2]
+        (parse_in, routed), = seen
+        remaining = turns.filter(bucket >= 3).count()
+        assert parse_in.count() == remaining == res.metrics["n_rows"]
+        # the committed-bucket filter sits BELOW the opaque parse
+        plan = routed._jdf.queryExecution().optimizedPlan().toString()
+        lines = plan.splitlines()
+        parse_at = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+        filter_at = next(i for i, ln in enumerate(lines)
+                         if "Filter" in ln and "xxhash64" in ln)
+        assert filter_at > parse_at, plan
+
+    def test_one_file_per_bucket_dir(self, spark, turns, tmpdir_path):
+        # AQE would coalesce this small input's shuffles into one
+        # partition and hide a shuffle that spreads a bucket over files
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            run_pipeline(spark, turns,
+                         PipelineConfig(out_dir=tmpdir_path, n_buckets=8,
+                                        partitions=8), resume=False)
+        finally:
+            spark.conf.set(key, prev)
+        for table in ("agg_sink_counts", "agg_token_counts",
+                      "agg_template_counts"):
+            files = _files_per_bucket_dir(os.path.join(tmpdir_path, table))
+            assert sorted(files) == [
+                os.path.join(tmpdir_path, table, f"bucket={b}")
+                for b in range(8)], files
+            assert set(files.values()) == {1}, (table, files)
+
+
 class TestArrowEngineParity:
     def test_arrow_equals_pandas_udf(self, spark, turns):
         from log2seq_spark.functions.udf import with_parsed

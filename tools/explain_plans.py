@@ -1,11 +1,14 @@
 """Dump .explain('formatted') for the engine's key plans to
 BENCH/plans.txt — evidence of plan quality (pushdown, broadcast joins,
-column pruning, no stray shuffles). Planning only: no job runs."""
+column pruning, no stray shuffles). Planning only, apart from schema
+inference and one small pipeline run whose routed sink the aggregate
+plans read (through a materialized cache)."""
 
 from __future__ import annotations
 
 import io
 import os
+import shutil
 import sys
 from contextlib import redirect_stdout
 
@@ -27,10 +30,31 @@ def main():
 
     # the flagship pipeline plan over a turns frame
     from log2seq_spark.sources.transcripts import transcripts
-    from log2seq_spark.plans.pipeline import PipelineConfig, enriched_turns
+    from log2seq_spark.plans import pipeline as pl
     turns = transcripts(spark, 50, seed=42, partitions=4)
-    enriched = enriched_turns(spark, turns, PipelineConfig(out_dir="unused"))
-    sections.append(("pipeline: enriched_turns", enriched))
+    cfg = pl.PipelineConfig(out_dir="unused")
+    sections.append(("pipeline: enriched_turns",
+                     pl.enriched_turns(spark, turns, cfg)))
+    # a resumed run drops committed buckets from the raw turns: the
+    # bucket Filter sits below the shuffle and the MapInArrow parse
+    resumed = turns.filter(~pl.bucket_of(cfg.n_buckets).isin([0, 1, 2]))
+    sections.append(("pipeline: enriched_turns on resume (buckets 0-2 "
+                     "committed)", pl.enriched_turns(spark, resumed, cfg)))
+    # the aggregate phase over the bucket-partitioned cache: the cache
+    # holds the only Exchange, the aggregates add none
+    import tempfile
+    agg_dir = tempfile.mkdtemp(prefix="l2s-explain-")
+    agg_cfg = pl.PipelineConfig(out_dir=agg_dir, n_buckets=8, partitions=8)
+    lineage = pl.run_pipeline(spark, turns, agg_cfg, resume=False).lineage_id
+    cache = pl.bucket_cache(spark, agg_cfg, lineage).persist()
+    # materialized, as the pipeline's stats collect leaves it: only then
+    # does the planner see the cache's hash partitioning on bucket
+    cache.count()
+    sections.append(("pipeline: aggregate bucket stats (off the "
+                     "bucket-partitioned cache)", pl.bucket_stats(cache)))
+    for name, table in pl.bucket_aggregates(cache, agg_cfg).items():
+        sections.append((f"pipeline: aggregate {name} (off the "
+                         "bucket-partitioned cache)", table))
 
     # storage-layout + admission-gate plans (round 4): the Z-value is
     # pure codegen'd bitwise expressions; the gate is ONE aggregate
@@ -95,6 +119,8 @@ def main():
         fh.write(out.getvalue())
     print("wrote BENCH/plans.txt",
           len(out.getvalue().splitlines()), "lines")
+    cache.unpersist()
+    shutil.rmtree(agg_dir, ignore_errors=True)
     spark.stop()
 
 
